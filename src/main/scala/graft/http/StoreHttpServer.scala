@@ -7,8 +7,12 @@ import graft.sources.PointSource
 import graft.wire.Rpc
 import java.net.InetSocketAddress
 import java.util.Base64
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.CountDownLatch
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import scala.concurrent.ExecutionContext
 
 /**
  * HTTP + base64-protobuf RPC façade — wire-compatible with the
@@ -21,6 +25,16 @@ import org.apache.spark.sql.functions._
  * Engine.*; responses materialize on this node exactly where the
  * reference materializes its RPC responses (bounded by max_variables /
  * max_values).
+ *
+ * A warm request pays only for its own scan. The store's relation
+ * (file index + schema) is cached per session by [[PointSource.read]]
+ * and guarded by a content fingerprint of the store's files, so an
+ * `/add`, a compaction or an in-place rewrite is seen by the next
+ * request, while an unchanged store is never re-listed for schema
+ * inference — the reference keeps its opened store files in an LRU for
+ * the same reason (store_manager.go:147-169). A `/get` then collects
+ * through [[StoreHttpServer.collectAtMost]]: one Spark job, at most
+ * cap+1 rows on the driver, 413 past the cap.
  */
 class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
                       nowMs: () => Long = () => System.currentTimeMillis(),
@@ -120,15 +134,15 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
     // bound (request limits alone don't bound the total: max_values
     // is a per-series tail and max_variables caps series, so either
     // one alone still leaves the product unbounded); crossing it
-    // rejects with 413 instead of OOMing the driver. A bare
-    // CollectLimit keeps the probe cheap: no global Sort — the scan
-    // short-circuits once limit+1 rows surface, so an over-cap
-    // request fails fast instead of paying a full top-K over every
-    // match. Per-stream time order (the actual wire contract,
+    // rejects with 413 instead of OOMing the driver. The probe is
+    // [[StoreHttpServer.collectAtMost]]: one Spark job, no global Sort,
+    // cancelled as soon as cap+1 rows surface, so an over-cap request
+    // fails fast instead of paying a full top-K over every match.
+    // Per-stream time order (the actual wire contract,
     // go/src/store.go:133-156 sorts within each stream) is restored
     // driver-side below on the ≤cap in-memory rows.
     val (rows, retrieveMs) = timed {
-      val r = df.limit(maxResponseValues + 1).collect()
+      val r = StoreHttpServer.collectAtMost(df, maxResponseValues + 1)
       if (r.length > maxResponseValues)
         throw new StoreHttpServer.ResponseTooLarge(
           s"/get matched more than $maxResponseValues values; narrow the " +
@@ -249,14 +263,17 @@ class StoreHttpServer(spark: SparkSession, storeDir: String, port: Int = 0,
               s"<td>${fs.map(_.length()).sum}</td></tr>"
           }.mkString
       } catch { case _: Throwable => "" }
-    // session-cache observability (r16): the two driver-side memos
-    // whose whole point is skipping per-call filesystem/Spark work —
-    // their hit rates belong on the status page, not just in docs
-    val (ifN, ifH, ifM) = graft.model.IndexFormat.memoStats
-    val (ccN, ccH, ccM) = graft.similarity.Ann.countMemoStats
-    val caches =
-      s"<tr><td>index-format markers</td><td>$ifN</td><td>$ifH</td><td>$ifM</td></tr>" +
-      s"<tr><td>corpus counts</td><td>$ccN</td><td>$ccH</td><td>$ccM</td></tr>"
+    // session-cache observability: the driver-side memos whose whole
+    // point is skipping per-call filesystem/Spark work — their hit
+    // rates belong on the status page, not just in docs. The store
+    // relation cache is the one every /get and /list goes through.
+    val caches = Seq(
+      "store relations" -> graft.sources.Tables.relCacheStats,
+      "index-format markers" -> graft.model.IndexFormat.memoStats,
+      "corpus counts" -> graft.similarity.Ann.countMemoStats,
+    ).map { case (memo, (n, hits, misses)) =>
+      s"<tr><td>$memo</td><td>$n</td><td>$hits</td><td>$misses</td></tr>"
+    }.mkString
     val body = ("<html><head><title>Store Status</title></head><body>" +
       s"<h1>Store Status</h1><p>store: $storeDir</p>" +
       "<table><tr><th>partition</th><th>files</th><th>bytes</th></tr>" +
@@ -303,6 +320,45 @@ object StoreHttpServer {
   /** Thrown when an unbounded /get would exceed the response cap;
     * mapped to HTTP 413 with the reason in the wire error field. */
   final class ResponseTooLarge(msg: String) extends RuntimeException(msg)
+
+  /** At most `n` rows of `df` (all of them when it has fewer), from ONE
+    * Spark job over every partition. `df.limit(n).collect()` plans a
+    * CollectLimit, whose take loop scans one partition, then four, and
+    * so on — two jobs or more for a lookup that matches a dozen rows.
+    * Here each task ships at most `n` rows, the driver keeps at most `n`
+    * in total, and the job is cancelled as soon as `n` rows have
+    * arrived. Kept rows come back in partition order, as a CollectLimit
+    * returns them. The job runs under the frame's own SQL execution
+    * (named "collect", like the Dataset action), so
+    * `QueryExecutionListener`s and SQL metrics see it. */
+  def collectAtMost(df: DataFrame, n: Int): Array[Row] = {
+    require(n > 0, s"collectAtMost needs n > 0, got $n")
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.executedPlan.execute()
+      val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+      var kept = 0
+      val stop = new CountDownLatch(1)
+      val job = rdd.sparkContext.submitJob(rdd,
+        (it: Iterator[InternalRow]) => it.take(n).map(_.copy()).toArray,
+        parts.indices,
+        (i: Int, rows: Array[InternalRow]) => parts.synchronized {
+          if (kept < n) { parts(i) = rows.take(n - kept); kept += parts(i).length }
+          if (kept >= n) stop.countDown()
+        },
+        ())
+      job.onComplete(_ => stop.countDown())(ExecutionContext.parasitic)
+      // n rows in (or the caller interrupted) with tasks still running:
+      // the rest is not needed
+      try stop.await() finally if (!job.isCompleted) job.cancel()
+      val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+      parts.synchronized {
+        // short of n rows, the job ran to its end: a failure rethrows
+        if (kept < n) job.value.get.get
+        parts.iterator.filter(_ != null).flatten.map(toRow(_).asInstanceOf[Row]).toArray
+      }
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val opts = args.filter(_.startsWith("--"))

@@ -66,9 +66,17 @@ object PointSource {
       concat(col("name"), lit("{user="),
         element_at(col("labels"), "user"), lit("}")))
 
-  /** Reads a point store written by [[write]]. */
+  /** Reads a point store written by [[write]].
+    *
+    * The base relation (file index + inferred schema) comes from
+    * [[Tables.parquetCached]], so a warm read of an unchanged store
+    * costs one recursive listing: no footer read, no schema-inference
+    * Spark job. Every write that changes the store's files — an
+    * `/add` append, a compaction swap, a file rewritten in place inside
+    * a `date=` partition — changes the cache's content fingerprint,
+    * and the next read re-lists. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).select(Point.columns.map(col): _*)
+    Tables.parquetCached(spark, path).select(Point.columns.map(col): _*)
 
   /**
    * Writes a point DataFrame as the at-rest layout: partitioned by UTC

@@ -53,32 +53,81 @@ object Tables {
     * directory and re-reads footers for schema inference on EVERY
     * call — ~65 ms of pure driver wall per call (measured,
     * MicroProfile `read-parquet-*`), paid by every gate build twice
-    * per bench pass and once per verify dump. Production engines
-    * never pay this per query: a catalog table / manifest-backed
-    * format (guide §6) persists the file index and schema. This cache
-    * is the session-local equivalent: it holds the ANALYZED BASE
-    * RELATION only — never row data, nothing survives the JVM, and
-    * every query still computes from the parquet bytes.
+    * per bench pass and once per verify dump, and by every wire
+    * `/get` and `/list` ([[PointSource.read]]), where the inference is
+    * a Spark job of its own. Production engines never pay this per
+    * query: a catalog table / manifest-backed format (guide §6)
+    * persists the file index and schema, and the reference store
+    * server keeps its opened files and header indexes in an LRU
+    * (store_manager.go:147-169). This cache is the session-local
+    * equivalent: it holds the ANALYZED BASE RELATION only — never row
+    * data, nothing survives the JVM, and every query still computes
+    * from the parquet bytes.
     *
-    * Staleness guard: entries are validated against the path's
-    * modification time (one getFileStatus, ~µs on local fs), so a
-    * store that is overwritten between reads (test fixtures, the
-    * compaction/aging jobs' swap dirs) never serves a stale index —
-    * the rewrite replaces the directory, which bumps its mtime. */
+    * Staleness guard: an entry is served only while the path's content
+    * fingerprint is unchanged — relative path, length and modification
+    * time of every file Spark would read under it (see [[fingerprint]]).
+    * One recursive listing per call, no footer read and no Spark job.
+    * A file added, removed, or rewritten in place (even at the same
+    * size) inside an existing `date=` partition changes the
+    * fingerprint, which a directory mtime does not (and on object
+    * stores a directory has no meaningful mtime). The fingerprint is
+    * taken BEFORE the read it guards, so a write that lands in between
+    * only costs one extra re-read on the next call, never a stale
+    * serve. Entries of sessions whose SparkContext has stopped are
+    * dropped on every access, so the map cannot outgrow the live
+    * sessions. */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Long, DataFrame)]()
+      (Vector[(String, Long, Long)], DataFrame)]()
+  private val relHits = new java.util.concurrent.atomic.AtomicLong()
+  private val relMisses = new java.util.concurrent.atomic.AtomicLong()
+
+  /** (entries, hits, misses) of the relation cache — rendered on the
+    * HTTP façade's /status page beside the other session memos. */
+  def relCacheStats: (Int, Long, Long) =
+    (relCache.size, relHits.get, relMisses.get)
+
+  /** (relative path, length, mtime) of every file under `path` that a
+    * parquet read would consider, sorted; `path` itself when it is a
+    * file. Hidden and underscore-prefixed names are skipped exactly as
+    * Spark's file index skips them (in-flight `_temporary` dirs of a
+    * concurrent append, `_SUCCESS`, checksum files), except
+    * `key=value` partition dirs. None when the path is missing or
+    * changes under the listing. */
+  private def fingerprint(spark: SparkSession,
+                          path: String): Option[Vector[(String, Long, Long)]] = {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    def visible(name: String) =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
+    def walk(fs: FileSystem, dir: Path, rel: String): Seq[(String, Long, Long)] =
+      fs.listStatus(dir).toSeq.filter(st => visible(st.getPath.getName))
+        .flatMap { st =>
+          val r = rel + st.getPath.getName
+          if (st.isDirectory) walk(fs, st.getPath, r + "/")
+          else Seq((r, st.getLen, st.getModificationTime))
+        }
+    try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = fs.getFileStatus(root)
+      Some(if (st.isDirectory) walk(fs, root, "").sorted.toVector
+        else Vector(("", st.getLen, st.getModificationTime)))
+    } catch { case _: java.io.IOException => None }
+  }
 
   def parquetCached(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val mtime =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime
-      catch { case _: Throwable => -1L }
-    if (mtime < 0) spark.read.parquet(path) // missing path: let the read throw
-    else relCache.compute((spark, path), (_, prev) =>
-      if (prev != null && prev._1 == mtime) prev
-      else (mtime, spark.read.parquet(path)))._2
+    relCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    fingerprint(spark, path) match {
+      case None =>
+        // missing path (let the read throw) or a listing raced a rewrite
+        relMisses.incrementAndGet()
+        spark.read.parquet(path)
+      case Some(fp) =>
+        relCache.compute((spark, path), (_, prev) =>
+          if (prev != null && prev._1 == fp) { relHits.incrementAndGet(); prev }
+          else { relMisses.incrementAndGet(); (fp, spark.read.parquet(path)) })._2
+    }
   }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =

@@ -29,6 +29,48 @@ class HttpSpec extends SparkSpec {
     bytes
   }
 
+  private def addPoints(port: Int, name: String, pts: Seq[(Long, Double)]): Unit =
+    post(port, "/add", Rpc.encodeAddRequest(Seq(Rpc.Stream(
+      Variable(name, Map("host" -> "a"), Variable.Gauge),
+      pts.map { case (ts, v) => (ts, Some(v), None, None) }))))
+
+  private def getValues(port: Int, variable: String): Seq[(Long, Double)] = {
+    val (ok, err, streams) = Rpc.decodeGetResponse(post(port, "/get",
+      Rpc.encodeGetRequest(Requests.GetRequest(variable))))
+    assert(ok, err.toString)
+    streams.flatMap(_.values.map(v => (v._1, v._2.get))).sortBy(_._1)
+  }
+
+  /** Call sites of the (non-streaming) Spark jobs started while `f`
+    * runs, read once the listener bus has delivered their ends. */
+  private def jobsDuring(f: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler._
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      private def ours(e: SparkListenerJobStart) =
+        Option(e.properties).forall(_.getProperty("sql.streaming.queryId") == null)
+      private val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (ours(e)) {
+        mine.add(e.jobId)
+        sites.add(Option(e.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+          .getOrElse(e.stageInfos.map(_.name).mkString(",")))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (mine.contains(e.jobId)) ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      val deadline = System.currentTimeMillis() + 10000L
+      while (ended.get < sites.size && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      Thread.sleep(200) // a straggling start still on the bus
+      while (ended.get < sites.size && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq
+  }
+
   test("add -> get(rate) -> list round-trip over HTTP+base64-protobuf") {
     val store = java.nio.file.Files.createTempDirectory("graft_http").toString + "/s"
     val srv = new StoreHttpServer(spark, store, port = 0,
@@ -201,6 +243,7 @@ class HttpSpec extends SparkSpec {
       assert(resp.body().contains("Session caches"))
       assert(resp.body().contains("index-format markers"))
       assert(resp.body().contains("corpus counts"))
+      assert(resp.body().contains("store relations"))
     } finally srv.stop()
   }
 
@@ -274,17 +317,21 @@ class HttpSpec extends SparkSpec {
   test("unbounded /get over a large match is capped: 413, never a full collect") {
     val store = java.nio.file.Files.createTempDirectory("graft_http7").toString + "/s"
     // cap at 10 so the fixture (30 points) overflows it
-    val srv = new StoreHttpServer(spark, store, nowMs = () => 100000L,
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 40 * 86400000L,
       maxResponseValues = 10).start()
     try {
-      post(srv.boundPort, "/add", Rpc.encodeAddRequest(Seq(Rpc.Stream(
-        Variable("/http/big", Map("host" -> "a"), Variable.Gauge),
-        (0 until 30).map(i => (1000L + i, Some(i.toDouble), None, None))))))
+      // one point per day: 30 date partitions, so the match spans files
+      addPoints(srv.boundPort, "/http/big",
+        (0 until 30).map(i => (i * 86400000L + 1000L, i.toDouble)))
       // no max_values / max_variables on the request -> default bound
       // kicks in, server rejects loudly instead of materializing all
       val unbounded = Rpc.encodeGetRequest(Requests.GetRequest("/http/big"))
-      val (code, bytes) = postRaw(srv.boundPort, "/get", unbounded)
+      postRaw(srv.boundPort, "/get", unbounded) // warm the store relation
+      var resp = (0, Array.empty[Byte])
+      val jobs = jobsDuring { resp = postRaw(srv.boundPort, "/get", unbounded) }
+      val (code, bytes) = resp
       assert(code == 413, s"expected 413 over-limit, got $code")
+      assert(jobs.length == 1, s"the capped collect must be one job: $jobs")
       val (ok, err, streams) = Rpc.decodeGetResponse(bytes)
       assert(!ok && err.exists(_.contains("max_values")) && streams.isEmpty,
         s"ok=$ok err=$err")
@@ -308,21 +355,106 @@ class HttpSpec extends SparkSpec {
         Variable("/http/ord", Map("host" -> "a"), Variable.Gauge),
         Seq((3000L, Some(3.0), None, None), (1000L, Some(1.0), None, None),
           (2000L, Some(2.0), None, None))))))
-      // the server's probe shape: Engine.get(...).limit(cap+1) — must
-      // plan as CollectLimit with no Sort anywhere (an over-cap
-      // request then fails fast instead of paying a global top-K)
-      val df = graft.api.Engine.get(
-        graft.sources.PointSource.read(spark, store),
-        Requests.GetRequest("/http/ord"))
-      val plan = df.limit(11).queryExecution.executedPlan.toString
-      assert(plan.contains("CollectLimit"), plan.take(1500))
+      // the plan the server actually runs for the /get (its "collect"
+      // execution, seen through a QueryExecutionListener) must hold no
+      // Sort anywhere (an over-cap request then fails fast instead of
+      // paying a global top-K) and no CollectLimit (one job, not the
+      // limit's partition ramp)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               durationNs: Long): Unit =
+          if (funcName == "collect") plans.add(qe.executedPlan.toString)
+        override def onFailure(funcName: String,
+                               qe: org.apache.spark.sql.execution.QueryExecution,
+                               error: Exception): Unit = ()
+      }
+      spark.listenerManager.register(qel)
+      try {
+        post(srv.boundPort, "/get", Rpc.encodeGetRequest(Requests.GetRequest("/http/ord")))
+        val deadline = System.currentTimeMillis() + 10000L
+        while (plans.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      } finally spark.listenerManager.unregister(qel)
+      assert(plans.size == 1, s"one collect execution per /get, saw ${plans.size}")
+      val plan = plans.peek()
+      assert(plan.contains("FileScan"), plan.take(1500))
       assert(!plan.contains("Sort"),
         s"over-cap probe must not plan a Sort:\n${plan.take(1500)}")
+      assert(!plan.contains("CollectLimit"), plan.take(1500))
       val (gok, gerr, gs) = Rpc.decodeGetResponse(post(srv.boundPort, "/get",
         Rpc.encodeGetRequest(Requests.GetRequest("/http/ord"))))
       assert(gok, gerr.toString)
       assert(gs.head.values.map(_._1) == Seq(1000L, 2000L, 3000L),
         "per-stream values must be time-ordered on the wire")
+    } finally srv.stop()
+  }
+
+  test("collectAtMost: one job, at most n rows, every row in partition order below n") {
+    import spark.implicits._
+    val df = spark.range(0, 1000, 1, 8).toDF("id")
+    val jobs = jobsDuring {
+      val r = StoreHttpServer.collectAtMost(df, 11)
+      assert(r.length == 11, r.length.toString)
+    }
+    assert(jobs.length == 1, jobs.toString)
+    // a partition holding more than n rows still ships at most n
+    assert(StoreHttpServer.collectAtMost(df.coalesce(1), 5).length == 5)
+    // under the bound: every row, partition by partition
+    assert(StoreHttpServer.collectAtMost(df.filter($"id" % 40 === 0), 100)
+      .map(_.getLong(0)).toSeq == (0L until 1000L by 40L))
+    assert(StoreHttpServer.collectAtMost(df.filter($"id" < 0), 3).isEmpty)
+  }
+
+  test("a warm raw /get runs exactly one Spark job and no schema inference") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http10").toString + "/s"
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 40 * 86400000L).start()
+    try {
+      addPoints(srv.boundPort, "/http/one", Seq(1000L -> 1.0, 2000L -> 2.0))
+      addPoints(srv.boundPort, "/http/one", Seq(86401000L -> 3.0))
+      assert(getValues(srv.boundPort, "/http/one{host=a}").length == 3) // warm-up
+      var values = Seq.empty[(Long, Double)]
+      val jobs = jobsDuring { values = getValues(srv.boundPort, "/http/one{host=a}") }
+      assert(values == Seq(1000L -> 1.0, 2000L -> 2.0, 86401000L -> 3.0))
+      assert(!jobs.exists(_.startsWith("parquet at")),
+        s"a warm /get must not re-infer the store schema: $jobs")
+      assert(jobs.length == 1, s"a warm raw /get must run one job: $jobs")
+    } finally srv.stop()
+  }
+
+  test("/get -> /add -> /get on one server returns the new point") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http11").toString + "/s"
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 100000L).start()
+    try {
+      addPoints(srv.boundPort, "/http/grow", Seq(1000L -> 1.0))
+      assert(getValues(srv.boundPort, "/http/grow{host=a}") == Seq(1000L -> 1.0))
+      // same date partition: only the partition's files change
+      addPoints(srv.boundPort, "/http/grow", Seq(2000L -> 2.0))
+      assert(getValues(srv.boundPort, "/http/grow{host=a}") ==
+        Seq(1000L -> 1.0, 2000L -> 2.0))
+    } finally srv.stop()
+  }
+
+  test("/add concurrent with /get: every response 200, the final /get sees every point") {
+    val store = java.nio.file.Files.createTempDirectory("graft_http12").toString + "/s"
+    val srv = new StoreHttpServer(spark, store, nowMs = () => 100000L).start()
+    try {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      addPoints(srv.boundPort, "/http/mix", Seq(500L -> 0.0))
+      val getBody = Rpc.encodeGetRequest(Requests.GetRequest("/http/mix{host=a}"))
+      val calls = (1 to 4).flatMap { i =>
+        Seq(
+          Future(postRaw(srv.boundPort, "/add", Rpc.encodeAddRequest(Seq(Rpc.Stream(
+            Variable("/http/mix", Map("host" -> "a"), Variable.Gauge),
+            Seq((1000L * i, Some(i.toDouble), None, None))))))._1),
+          Future(postRaw(srv.boundPort, "/get", getBody)._1))
+      }
+      val codes = Await.result(Future.sequence(calls), 120.seconds)
+      assert(codes.forall(_ == 200), codes.toString)
+      assert(getValues(srv.boundPort, "/http/mix{host=a}") ==
+        (0 to 4).map(i => (if (i == 0) 500L else 1000L * i) -> i.toDouble))
     } finally srv.stop()
   }
 

@@ -23,6 +23,33 @@ class StoreSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("a file rewritten in place inside a partition is seen by the next read") {
+    // The relation cache serves a warm read from its file index; a
+    // rewrite inside an existing date= dir leaves the store root's mtime
+    // alone, so only a per-file fingerprint can tell the index is stale.
+    val dir = tmpDir()
+    PointSource.write(series(Seq(1000L -> 1.0, 2000L -> 2.0)), dir)
+    assert(collectTsVal(PointSource.read(spark, dir)) == Seq(1000L -> 1.0, 2000L -> 2.0))
+    val (_, hits0, _) = graft.sources.Tables.relCacheStats
+    assert(collectTsVal(PointSource.read(spark, dir)).length == 2)
+    assert(graft.sources.Tables.relCacheStats._2 == hits0 + 1,
+      "an unchanged store must be served from the relation cache")
+    // the day's part file is swapped for one written elsewhere with
+    // more points, the way a day rewrite lands: old file gone, new
+    // file (and its checksum) in the same date= dir
+    val other = tmpDir()
+    PointSource.write(series(Seq(1000L -> 5.0, 2000L -> 6.0, 3000L -> 7.0)), other)
+    def dayDir(root: String) =
+      new java.io.File(root).listFiles().filter(_.getName.startsWith("date=")).head
+    val day = dayDir(dir)
+    day.listFiles().filter(_.getName.contains("part-")).foreach(_.delete())
+    dayDir(other).listFiles().filter(_.getName.contains("part-")).foreach { f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(day, f.getName).toPath)
+    }
+    assert(collectTsVal(PointSource.read(spark, dir)) ==
+      Seq(1000L -> 5.0, 2000L -> 6.0, 3000L -> 7.0))
+  }
+
   test("gorilla tier: lossless round-trip and date-partition pruning before decode") {
     val dir = tmpDir()
     val in = graft.model.Point.withSeriesKey(samplePoints())
