@@ -1,8 +1,10 @@
 package graft.cli
 
+import graft.SparkInit
 import graft.dedup.Dedup
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,6 +30,11 @@ import org.apache.spark.sql.functions._
  * joins, broadcast hot sets, one-tokenize exchanges). Shuffles ride
  * content hashes and blocking keys — no stage is quadratic and no
  * stage holds more than a bounded sketch per row.
+ *
+ * Two frames are materialized once, each released when the run ends:
+ * the flagged frame after steps 1+2 and the stripped frame after step 4.
+ * Later stages plan against these leaves, not the upstream lineage, and
+ * the input is scanned once (twice with `--classifier-min`).
  *
  * Usage:
  *   runMain graft.cli.Curate --in=<documents.parquet> --out=<dir>
@@ -235,95 +242,112 @@ object Curate {
     // so the JSON report cannot silently diverge from what shipped
     // (the former second copy of the keeper/gate predicates is gone).
     val keeperW = Window.partitionBy(md5(col("text")))
-    val flagged = score(docs.withColumn("__b", isBench)
+    val flaggedPlan = score(docs.withColumn("__b", isBench)
         .withColumn("__k", col("__b") ||
           min(when(!col("__b"), col("doc_id"))).over(keeperW) === col("doc_id")))
       .withColumn("__g", col("__k") && (col("__b") ||
         (col("quality") >= qualityMin && col("lang_pred") === lang && clsGate)))
-    val scored = flagged.filter(col("__k"))
-    val gated = flagged.filter(col("__g"))
-    // stage counters in ONE pass over the flags (each .count() would
-    // re-run the whole lineage — the review-flagged multiplier)
-    val statsRow = flagged
-      .agg(count(lit(1)).as("nInput"),
-        count(when(col("__k"), 1)).as("nDeduped"),
-        count(when(col("__g") && !col("__b"), 1)).as("nGated"))
-      .collect()(0)
-    val (nInput, nDeduped, nGated) =
-      (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
+    // materialization point 1: the stage counters, the gated branch
+    // and the pack join's `scored` side all read the flags
+    materialized(flaggedPlan) { flagged =>
+      val scored = flagged.filter(col("__k"))
+      val gated = flagged.filter(col("__g"))
+      // stage counters in ONE pass over the flags
+      val statsRow = flagged
+        .agg(count(lit(1)).as("nInput"),
+          count(when(col("__k"), 1)).as("nDeduped"),
+          count(when(col("__g") && !col("__b"), 1)).as("nGated"))
+        .collect()(0)
+      val (nInput, nDeduped, nGated) =
+        (statsRow.getLong(0), statsRow.getLong(1), statsRow.getLong(2))
 
-    // 3. decontamination span cut (returns the gated non-bench docs,
-    // row-for-row — nCut ≡ nGated by construction; text shrinks)
-    val cut = Dedup.cutContaminatedSpans(
-      gated.select(col("doc_id"), col("text"), col("source")),
-      col("source") === benchSource, l = ngram)
-    val nCut = nGated
+      // 3. decontamination span cut (returns the gated non-bench docs,
+      // row-for-row — nCut ≡ nGated by construction; text shrinks)
+      val cut = Dedup.cutContaminatedSpans(
+        gated.select(col("doc_id"), col("text"), col("source")),
+        col("source") === benchSource, l = ngram)
+      val nCut = nGated
 
-    // 4. boilerplate strip on the decontaminated text; fully-cut or
-    // fully-boilerplate docs have no surviving segments and drop out.
-    // Cached (with an unpersist after the write): four consumers — the
-    // drop counter, the near-dup pass, the pack join, and the write —
-    // would otherwise each re-run the tokenize-heavy cut+strip lineage.
-    val strippedAll = Dedup.stripBoilerplateSegments(
-        cut.select(col("doc_id"), col("clean_text").as("text")),
-        width = segWidth, maxDf = segMaxDf)
-      .cache()
-    // counted BEFORE the empty filter: fully-boilerplate docs are
-    // exactly the ones that dropped the most segments
-    val nBoilerDropped = strippedAll
-      .agg(coalesce(sum("n_dropped"), lit(0L))).collect()(0).getLong(0)
-    val stripped = strippedAll.filter(length(col("clean_text")) > 0)
+      // 4. boilerplate strip on the decontaminated text; fully-cut or
+      // fully-boilerplate docs have no surviving segments and drop out.
+      // Materialization point 2: the drop counter, the near-dup pass,
+      // the pack join and the write all read the stripped frame.
+      materialized(Dedup.stripBoilerplateSegments(
+          cut.select(col("doc_id"), col("clean_text").as("text")),
+          width = segWidth, maxDf = segMaxDf)) { strippedAll =>
+        // counted BEFORE the empty filter: fully-boilerplate docs are
+        // exactly the ones that dropped the most segments
+        val nBoilerDropped = strippedAll
+          .agg(coalesce(sum("n_dropped"), lit(0L))).collect()(0).getLong(0)
+        val stripped = strippedAll.filter(length(col("clean_text")) > 0)
 
-    // 5. leakage-safe split: near-dup groups (MinHash+LSH over the
-    // FINAL text) share a content-keyed split bucket
-    val grp = Dedup.duplicateGroups(
-      Dedup.minhashLshPairs(
-          stripped.select(col("doc_id"), col("clean_text").as("text")),
-          n = 3, numHashes = 16, bands = 4, threshold = 0.5)
-        .select(col("id_a"), col("id_b")))
-    val split = stripped.join(grp, Seq("doc_id"), "left")
-      .withColumn("gid", coalesce(col("group_id"), col("doc_id")))
-      .withColumn("bucket",
-        conv(substring(md5(concat(lit("g#"), col("gid").cast("string"))),
-          1, 4), 16, 10).cast("long") % 100)
-      .withColumn("split",
-        when(col("bucket") < 90, "train")
-          .when(col("bucket") < 95, "val").otherwise("test"))
+        // 5. leakage-safe split: near-dup groups (MinHash+LSH over the
+        // FINAL text) share a content-keyed split bucket
+        val grp = Dedup.duplicateGroups(
+          Dedup.minhashLshPairs(
+              stripped.select(col("doc_id"), col("clean_text").as("text")),
+              n = 3, numHashes = 16, bands = 4, threshold = 0.5)
+            .select(col("id_a"), col("id_b")))
+        val split = stripped.join(grp, Seq("doc_id"), "left")
+          .withColumn("gid", coalesce(col("group_id"), col("doc_id")))
+          .withColumn("bucket",
+            conv(substring(md5(concat(lit("g#"), col("gid").cast("string"))),
+              1, 4), 16, 10).cast("long") % 100)
+          .withColumn("split",
+            when(col("bucket") < 90, "train")
+              .when(col("bucket") < 95, "val").otherwise("test"))
 
-    // 6. deterministic shard + token packing offsets per (split, shard)
-    val packed = split
-      .join(scored.select(col("doc_id"), col("source"), col("quality"),
-        col("lang_pred")), "doc_id")
-      .withColumn("n_tok",
-        size(TextOps.tokens(col("clean_text"))).cast("long"))
-      .withColumn("shard",
-        conv(substring(md5(concat(lit("s#"), col("doc_id").cast("string"))),
-          1, 4), 16, 10).cast("long") % shards)
-      .withColumn("start_off", coalesce(
-        sum(col("n_tok")).over(Window.partitionBy("split", "shard")
-          .orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .withColumn("bin_first", expr(s"start_off div $bin"))
-      .select("doc_id", "clean_text", "source", "quality", "lang_pred",
-        "n_tok", "shard", "start_off", "bin_first", "split")
+        // 6. deterministic shard + token packing offsets per (split, shard)
+        val packed = split
+          .join(scored.select(col("doc_id"), col("source"), col("quality"),
+            col("lang_pred")), "doc_id")
+          .withColumn("n_tok",
+            size(TextOps.tokens(col("clean_text"))).cast("long"))
+          .withColumn("shard",
+            conv(substring(md5(concat(lit("s#"), col("doc_id").cast("string"))),
+              1, 4), 16, 10).cast("long") % shards)
+          .withColumn("start_off", coalesce(
+            sum(col("n_tok")).over(Window.partitionBy("split", "shard")
+              .orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0L)))
+          .withColumn("bin_first", expr(s"start_off div $bin"))
+          .select("doc_id", "clean_text", "source", "quality", "lang_pred",
+            "n_tok", "shard", "start_off", "bin_first", "split")
 
-    // shard-clustered, offset-ordered files: a trainer reading shard s
-    // gets its documents contiguous and in packing order
-    packed
-      .repartition(col("split"), col("shard"))
-      .sortWithinPartitions(col("split"), col("shard"), col("start_off"))
-      .write.mode("overwrite").partitionBy("split").parquet(out)
-    strippedAll.unpersist(false)
+        // shard-clustered, offset-ordered files: a trainer reading shard s
+        // gets its documents contiguous and in packing order
+        packed
+          .repartition(col("split"), col("shard"))
+          .sortWithinPartitions(col("split"), col("shard"), col("start_off"))
+          .write.mode("overwrite").partitionBy("split").parquet(out)
 
-    // explicit schema: a fully-filtered corpus (tiny / all-boilerplate
-    // / fully-contaminated) writes no part files, and schema INFERENCE
-    // over that empty dir throws — with the schema pinned the re-read
-    // returns an empty frame and the report says nFinal=0 instead
-    val outDf = spark.read.schema(packed.schema).parquet(out)
-    val perSplit = outDf.groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    Report(nInput, nDeduped, nGated, nCut, perSplit.values.sum,
-      nBoilerDropped, perSplit)
+        // explicit schema: a fully-filtered corpus (tiny / all-boilerplate
+        // / fully-contaminated) writes no part files, and schema INFERENCE
+        // over that empty dir throws — with the schema pinned the re-read
+        // returns an empty frame and the report says nFinal=0 instead
+        val outDf = spark.read.schema(packed.schema).parquet(out)
+        val perSplit = outDf.groupBy("split").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        Report(nInput, nDeduped, nGated, nCut, perSplit.values.sum,
+          nBoilerDropped, perSplit)
+      }
+    }
+  }
+
+  /** Runs `body` on `df` materialized by a lazy `localCheckpoint`: the
+    * first action on the leaf computes and keeps its blocks, later ones
+    * read them, and plans built on the leaf do not re-analyze `df`'s
+    * lineage. The leaf's layout is what Spark reports for `df`'s plan
+    * (unknown under adaptive execution), never a hand-made claim. The
+    * blocks are released in `finally`, so a failed stage leaves no
+    * persisted RDD behind in a long-lived session. */
+  private def materialized[T](df: DataFrame)(body: DataFrame => T): T = {
+    val leaf = df.localCheckpoint(eager = false)
+    try body(leaf)
+    finally leaf.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
   }
 
   private val KnownOpts = Set("in", "out", "index", "bench-source",
@@ -346,14 +370,12 @@ object Curate {
     val in = opts.getOrElse("in",
       sys.error("--in=<documents parquet> is required"))
     val out = opts.getOrElse("out", sys.error("--out=<dir> is required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    // engine settings from SparkInit.common, the ones Verify, Bench and
+    // perfbench run; master and shuffle partitions stay this main's own
+    val spark = SparkInit.common(SparkSession.builder()
+        .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

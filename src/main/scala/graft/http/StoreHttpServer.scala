@@ -1,6 +1,7 @@
 package graft.http
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import graft.SparkInit
 import graft.api.Engine
 import graft.model.Variable
 import graft.sources.PointSource
@@ -370,16 +371,12 @@ object StoreHttpServer {
     val retention = opts.get("config")
       .map(p => graft.config.StoreConfig.parseFile(p).retention)
       .getOrElse(graft.retention.Retention.Policy(Nil))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata parquet may flag timestamps isAdjustedToUTC=false; read them
-      // as plain TIMESTAMP (session tz is UTC) so unix_millis & friends resolve
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
+    // engine settings from SparkInit.common, the ones Verify, Bench and
+    // perfbench run; master and shuffle partitions stay this main's own
+    val spark = SparkInit.common(SparkSession.builder()
+        .master(sys.env.getOrElse("GRAFT_MASTER", "local[4]"))
+        .config("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val s = new StoreHttpServer(spark, store,

@@ -3,8 +3,11 @@ package graft
 import graft.cli.Curate
 import graft.functions.VectorOps
 import graft.text.TextOps
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.file.{Files, Paths}
 
 /** End-to-end spec for the composed curation pipeline CLI. */
 class CurateSpec extends SparkSpec {
@@ -81,6 +84,57 @@ class CurateSpec extends SparkSpec {
     assert(ids.contains(2L), "clean training doc lost")
     assert(ids.contains(3L), "null-source doc silently dropped")
     assert(rep.nInput == 4 && rep.nDeduped == 4)
+  }
+
+  test("Curate.run leaves no persisted RDD behind, after success and after a failed write") {
+    val in = "/root/testdata/sf0.001/documents.parquet"
+    val base = Files.createTempDirectory("graft-curate-release").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    Curate.run(spark, in, s"$base/ok")
+    assert(persisted == before, "a successful run left persisted RDDs")
+    // `out` below a plain file: every stage up to the write runs (both
+    // materializations included), then the write itself fails
+    val plain = Files.createFile(Paths.get(s"$base/plain")).toString
+    intercept[Exception](Curate.run(spark, in, s"$plain/out"))
+    assert(persisted == before, "a run whose write failed left persisted RDDs")
+  }
+
+  test("one Curate.run executes exactly one query that scans its input") {
+    val in = "/root/testdata/sf0.001/documents.parquet"
+    // live scans only: adaptive query stages are followed, cached
+    // relations are not (their scan ran in an earlier query)
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val scanning = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val sentinel = "graft-curate-scan-sentinel"
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = {
+        if (scans(qe.executedPlan).exists(
+            _.relation.location.rootPaths.exists(_.toString.endsWith(in))))
+          scanning.add(funcName)
+        if (qe.analyzed.toString.contains(sentinel)) done.countDown()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val out = Files.createTempDirectory("graft-curate-scans").toString + "/out"
+    spark.listenerManager.register(listener)
+    try {
+      Curate.run(spark, in, out)
+      // listener events arrive in order: once the sentinel query is
+      // seen, every execution of the run has been seen
+      spark.range(1).select(lit(sentinel)).collect()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(scanning.size == 1,
+      s"expected one query scanning the input, saw ${scanning.toArray.mkString(", ")}")
   }
 
   test("the scoring stage runs bit-identical under Structured Streaming") {
